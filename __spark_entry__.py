@@ -54,10 +54,9 @@ _OPERATOR_MODULES = (
 def _collect(attr: str) -> dict:
     out: dict = {}
     for mod_name in _OPERATOR_MODULES:
-        try:
-            mod = importlib.import_module(mod_name)
-        except ImportError:
-            continue
+        # An ImportError propagates: a broken module fails the run
+        # instead of silently dropping its queries and oracles.
+        mod = importlib.import_module(mod_name)
         out.update(getattr(mod, attr, {}))
     return out
 

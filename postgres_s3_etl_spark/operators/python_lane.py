@@ -1,4 +1,9 @@
-"""Parallelism pinning for per-group / per-row-compute-bound stages.
+"""The Python lane: one row mapper, plus parallelism pinning for
+per-group / per-row-compute-bound stages.
+
+:func:`map_rows` is the single row-wise crossing of the Arrow
+``mapInPandas`` boundary: operators hand it a per-row function and
+an output schema, and it owns the batch loop and frame construction.
 
 Two situations defeat Spark's byte-based parallelism heuristics, and
 both showed up as real 9-10x serializations in this repo:
@@ -31,7 +36,39 @@ exchange for the pin).
 
 from __future__ import annotations
 
+from collections.abc import Callable, Iterable, Iterator
+
+import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql.types import DataType, StructType
+
+
+def map_rows(
+    df: DataFrame,
+    fn: Callable[..., Iterable[tuple]],
+    schema: StructType | str,
+) -> DataFrame:
+    """Run ``fn(*row)`` for every row of ``df`` inside Arrow-batched
+    ``mapInPandas``.
+
+    Each row's values arrive in ``df``'s column order. ``fn`` yields
+    zero or more output tuples in ``schema`` order, so a row can be
+    dropped (yield nothing) or expanded 1→N. ``schema`` is a DDL
+    string or a ``StructType``; the output column names come from it
+    alone. One pandas frame is emitted per input Arrow batch.
+    """
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    names = schema.fieldNames()
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            rows = pdf.itertuples(index=False, name=None)
+            yield pd.DataFrame(
+                [out for row in rows for out in fn(*row)], columns=names
+            )
+
+    return df.mapInPandas(batches, schema)
 
 
 def repartition_for_grouped_python(df: DataFrame, *key_cols: str) -> DataFrame:

@@ -390,11 +390,13 @@ def text_unigram_lm_heldout(
     floor-truncated doubles.
     """
     inv, rounds = _trained(spark, sf_dir, "train")
+    if not rounds:
+        return spark.createDataFrame([], _HELDOUT_SCHEMA)
     # Round-15 (guide §1.2/§5): checkpoint the held-out word table —
     # the emptiness probe and the scoring aggregate previously each
     # re-ran the corpus scan + tokenize + groupBy from scratch.
     hw = _word_freq(spark, sf_dir, "heldout").localCheckpoint()
-    if not rounds or not hw.take(1):
+    if not hw.take(1):
         return spark.createDataFrame([], _HELDOUT_SCHEMA)
     total = sum(c for _, c in inv)
     # Round-15: ONE pass instead of two — the old `base` aggregate

@@ -6,6 +6,9 @@ column names, and an order-insensitive value hash (floats rounded to
 6 significant-ish decimals, like a tolerant driver would).
 
 Usage: python scripts/check_correctness.py [sf_dir] [name ...]
+
+Exits non-zero when a query fails, or when a named query does not
+exist.
 """
 
 from __future__ import annotations
@@ -57,6 +60,10 @@ def main() -> int:
     import __spark_entry__ as e
 
     qs, oracles = e.queries(), e.oracle_sql()
+    unknown = sorted(only - qs.keys())
+    if unknown:
+        print("no such query: " + ", ".join(unknown), file=sys.stderr)
+        return 2
     if os.environ.get("SPARK_GRAFT_PLAIN_SESSION"):
         # Mimic the driver: a bare SparkSession with NONE of our
         # session.py defaults — catches any query that silently

@@ -8,6 +8,8 @@ from __future__ import annotations
 
 import re
 
+import pytest
+
 #: §2 names that intentionally have no queries() entry (documented
 #: environment-gated items).
 GATED = {"stream_sessionize_tws"}
@@ -55,3 +57,15 @@ def test_oracle_strings_are_nonempty_sql():
     e = _entry()
     for name, sql in e.oracle_sql().items():
         assert isinstance(sql, str) and "SELECT" in sql.upper(), name
+
+
+def test_failed_module_import_is_loud(monkeypatch):
+    """A module that cannot be imported must raise out of queries(),
+    not quietly drop its queries and their oracles."""
+    e = _entry()
+    missing = "postgres_s3_etl_spark.operators.no_such_module"
+    monkeypatch.setattr(
+        e, "_OPERATOR_MODULES", e._OPERATOR_MODULES + (missing,)
+    )
+    with pytest.raises(ImportError):
+        e.queries()
